@@ -462,17 +462,24 @@ def tile_rollup_query(
     tmp_path = f"{out}/_tiles_finest_tmp"
 
     def merge(batch_df: DataFrame, batch_id: int) -> None:
-        if anchor_z is not None:
-            merge_finest_batch_incremental(
-                batch_df.sparkSession, batch_df.select("tile", "cnt"),
-                finest_path, tiles_path, max_z, min_z, anchor_z,
-                stats=merge_stats,
-            )
-        else:
-            merge_finest_batch(
-                batch_df.sparkSession, batch_df.select("tile", "cnt"),
-                finest_path, tmp_path, tiles_path, max_z, min_z,
-            )
+        # the merges run several actions over the batch (emptiness probe,
+        # anti-join + union, write): cache it so the stateful aggregation
+        # runs once per micro-batch
+        updated = batch_df.select("tile", "cnt").persist()
+        try:
+            if anchor_z is not None:
+                merge_finest_batch_incremental(
+                    batch_df.sparkSession, updated,
+                    finest_path, tiles_path, max_z, min_z, anchor_z,
+                    stats=merge_stats,
+                )
+            else:
+                merge_finest_batch(
+                    batch_df.sparkSession, updated,
+                    finest_path, tmp_path, tiles_path, max_z, min_z,
+                )
+        finally:
+            updated.unpersist()
 
     w = (
         finest.writeStream.foreachBatch(merge)

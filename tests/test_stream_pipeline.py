@@ -139,6 +139,29 @@ class TestStreamPipeline:
         assert got == want
         assert run["summary"]["n_dup_pairs_distinct"] == len(want)
 
+    def test_tile_state_rows_counted_once(self, spark, run, tmp_path):
+        """The tiles query computes each micro-batch once: its stateful
+        aggregation's total state rows equal the distinct finest tiles
+        (an action per use of the batch re-ran the aggregation and
+        over-counted them)."""
+        import shutil
+
+        from osm_pbf_convert_spark.streaming.pipeline import tile_rollup_query
+
+        out, ckpt = str(tmp_path / "out"), str(tmp_path / "ckpt")
+        shutil.copytree(
+            f"{run['out']}/entities", f"{out}/entities",
+            ignore=shutil.ignore_patterns("_spark_metadata"),
+        )
+        schema = spark.read.parquet(f"{out}/entities").schema
+        q = tile_rollup_query(spark, out, ckpt, max_z=MAX_Z, entity_schema=schema)
+        try:
+            assert q.awaitTermination(300)
+        finally:
+            q.stop()
+        state_rows = q.lastProgress["stateOperators"][0]["numRowsTotal"]
+        assert state_rows == spark.read.parquet(f"{out}/tiles_finest").count()
+
     def test_rerun_is_idempotent(self, spark, run):
         ents = lambda: spark.read.parquet(f"{run['out']}/entities").filter(
             F.col("kind") <= 2

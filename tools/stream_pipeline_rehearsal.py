@@ -90,33 +90,32 @@ def _pp(p, key):
 
 def _sink_log_names(sink_dir: str) -> set:
     """Basenames of every data file the parquet streaming sink's
-    ``_spark_metadata`` transaction log says it committed: the latest
+    ``_spark_metadata`` transaction log says is live: the latest
     ``.compact`` (which folds in everything before it) plus later
-    increments -- the exactly-once file inventory downstream readers
-    trust."""
+    increments, replayed in batch order -- an ``add`` entry commits a
+    file, a later ``delete`` entry removes it. The exactly-once file
+    inventory downstream readers trust."""
     log_dir = os.path.join(sink_dir, "_spark_metadata")
-    entries = [f for f in os.listdir(log_dir) if not f.endswith(".tmp")]
-    compacts = sorted(
-        int(f.split(".")[0]) for f in entries if f.endswith(".compact")
-    )
-    start = compacts[-1] if compacts else -1
+    batches = {}
+    for f in os.listdir(log_dir):
+        base, _, suffix = f.partition(".")
+        if base.isdigit() and suffix in ("", "compact"):
+            batches[int(base)] = f
+    compacts = [n for n, f in batches.items() if f.endswith(".compact")]
+    start = max(compacts, default=-1)
     names = set()
-    for f in entries:
-        base = f.split(".")[0]
-        try:
-            n = int(base)
-        except ValueError:
-            continue
-        if f.endswith(".compact"):
-            if n != start:
-                continue
-        elif n <= start:
-            continue
-        with open(os.path.join(log_dir, f)) as fh:
+    for n in sorted(b for b in batches if b >= start):
+        with open(os.path.join(log_dir, batches[n])) as fh:
             for line in fh:
                 line = line.strip()
-                if line.startswith("{"):
-                    names.add(os.path.basename(json.loads(line)["path"]))
+                if not line.startswith("{"):
+                    continue
+                entry = json.loads(line)
+                name = os.path.basename(entry["path"])
+                if entry["action"] == "add":
+                    names.add(name)
+                elif entry["action"] == "delete":
+                    names.discard(name)
     return names
 
 
